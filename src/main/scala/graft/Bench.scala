@@ -152,19 +152,6 @@ object Bench {
       }
       baseDetail(name) = (System.nanoTime() - t0) / 1e9
     }
-    // Cross-sweep warm start (r12 verdict #7): hydrate the five memo
-    // bases from the fingerprint-keyed snapshot store when this
-    // testdata was already swept by a previous bench JVM — the builds
-    // below then hit the memo and cost ~0, the production "load the
-    // index, don't rebuild it" shape. A cold sweep builds as before
-    // and snapshots at the end. SPARK_GRAFT_NO_WARM=1 forces the cold
-    // path (honest cold-build measurement).
-    val noWarm = sys.env.get("SPARK_GRAFT_NO_WARM").contains("1")
-    var warmBases = 0
-    if (!noWarm) timedBase("warm_load") {
-      warmBases = graft.queries.SharedBases.warmStart(spark, sfDir)
-        .count(_._2)
-    }
     timedBase("minhash_pairs") {
       graft.queries.SharedBases.minhashPairs(spark, sfDir) }
     timedBase("minhash_sigs") {
@@ -175,6 +162,10 @@ object Bench {
       graft.queries.SharedBases.dbscanRoles(spark, sfDir) }
     timedBase("knn_edges") {
       graft.queries.SharedBases.knnEdges(spark, sfDir) }
+    // q_stream_ivf_assign's quantizer: built here so the drain's timer
+    // measures the per-trigger assignment, not the corpus coding pass
+    timedBase("ivf_quantizer") {
+      graft.queries.SharedBases.ivfQuantizer(spark, sfDir) }
     // q_pipeline_incremental's 24-hourly-file fixture (r7 verdict #1):
     // built HERE, timed, so the query's own timer measures the glob
     // read + two incremental runs instead of 24-way small-file write
@@ -196,10 +187,6 @@ object Bench {
     // corpus staging writes bill here.
     timedBase("fixture_stream") {
       graft.queries.StreamStaging.prebuild(spark, sfDir) }
-    // one-off snapshot write of any base the store was missing (warm
-    // sweeps skip it structurally — everything already present)
-    if (!noWarm) timedBase("snapshot") {
-      graft.queries.SharedBases.snapshot(spark, sfDir) }
     val baseBuild = (System.nanoTime() - tBase) / 1e9
     canary("post_base_build")
     // Streaming-engine warmup, untimed (r16 optimization round): the
@@ -443,7 +430,7 @@ object Bench {
         f""""total_raw":$totalRaw%.3f,""" +
         s""""run1":${qsJson(run1.toSeq)},""" +
         s""""errors":${errsJson(160)},"retried":$retr,""" +
-        f""""shared_base_build":$baseBuild%.3f,"shared_base_warm":$warmBases,""" +
+        f""""shared_base_build":$baseBuild%.3f,""" +
         s""""base_build_detail":$baseDet,""" +
         f""""canary":${qsJson(canaries.toSeq)},"canary_skew":$canarySkew%.2f,""" +
         f""""canary_q":${qsJson(canaryQ.toSeq)},""" +
@@ -493,18 +480,23 @@ object Bench {
     java.nio.file.Files.write(out,
       (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     // Fixed-name byte-identical mirror of the stdout line (r16 verdict
-    // #2): the official per-query PERF comparison has been empty since
-    // r14 because the driver's tail parse never recovered the line —
-    // with the mirror the comparison can never silently vanish again.
-    java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LINE.json"),
+    // #2), beside the full artifact (./BENCH_LINE.json by default): the
+    // official per-query PERF comparison has been empty since r14
+    // because the driver's tail parse never recovered the line — with
+    // the mirror the comparison can never silently vanish again.
+    java.nio.file.Files.write(out.resolveSibling("BENCH_LINE.json"),
       (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     // The stdout line goes out LAST, after Spark is stopped and logging
     // silenced, so nothing (executor shutdown WARNs, sbt banners — see
     // build.sbt outputStrategy/showSuccess) can print after it: the
-    // driver's tail capture must find it as the final stdout line.
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.stop()
-    println(line)
-    System.out.flush()
+    // driver's tail capture must find it as the final stdout line — even
+    // when the stop itself throws.
+    try {
+      spark.sparkContext.setLogLevel("ERROR")
+      spark.stop()
+    } finally {
+      println(line)
+      System.out.flush()
+    }
   }
 }

@@ -49,12 +49,29 @@ object Main {
   }
 
   /** One incremental batch: read logs, merge into parquet state, write
-    * state + top-K through the staging swap. Factored out so tests can
-    * replay it without a JVM fork.
+    * state + top-K through the staging swap ([[mergeAndPublish]]), then
+    * read the published top-K back for its row count. Factored out so
+    * tests can replay it without a JVM fork.
     */
   def runOnce(spark: SparkSession, logsGlob: String, stateDir: String,
               topKDir: String, k: Int): (Long, Long) = {
-    val lines = Sources.textLines(spark, logsGlob)
+    val stateRows = mergeAndPublish(Sources.textLines(spark, logsGlob),
+      stateDir, topKDir, k)
+    val topKRows = spark.read.parquet(topKDir).count()
+    println(s"[graft] state=$stateRows rows, topK=$topKRows prefixes")
+    (stateRows, topKRows)
+  }
+
+  /** The incremental step shared by the hourly job ([[runOnce]]) and its
+    * streaming backfill (`StreamingPipeline.runAvailableNow`, once per
+    * micro-batch): merge `lines` into the parquet state at `stateDir`
+    * (empty when absent), then overwrite state and top-K, both with
+    * `last_updated`, through the staging swap. Returns the merged state's
+    * row count.
+    */
+  def mergeAndPublish(lines: DataFrame, stateDir: String, topKDir: String,
+                      k: Int): Long = {
+    val spark = lines.sparkSession
     val state =
       if (new Path(stateDir).getFileSystem(
           spark.sessionState.newHadoopConf()).exists(new Path(stateDir)))
@@ -66,9 +83,7 @@ object Main {
       val stateRows = merged.count() // materialize BEFORE touching state dir
       Sinks.overwriteSafely(withLastUpdated(merged), stateDir)
       Sinks.overwriteSafely(withLastUpdated(topK), topKDir)
-      val topKRows = spark.read.parquet(topKDir).count()
-      println(s"[graft] state=$stateRows rows, topK=$topKRows prefixes")
-      (stateRows, topKRows)
+      stateRows
     } finally merged.unpersist()
   }
 }

@@ -57,24 +57,19 @@ object Pipeline {
 
   /** (prefix, query, frequency) → (prefix, completions-json) top-K table.
     *
-    * Skew (SURVEY §4.3): the default path relies on the native
-    * Partial+Final WindowGroupLimit — each map task ships only k rows per
-    * prefix, so a hot 2-char prefix shuffles k×tasks rows, not its fan-in
-    * (plan-audited on a skewed fixture in PlanAuditSpec). `salts > 1`
-    * switches to [[TopK.salted]], which additionally spreads the hot
-    * prefix's FINAL pass over `salts` reducers — for deployments where
-    * k×tasks on one reducer is itself a straggler (100k-task clusters).
-    * Identical output either way.
+    * Skew (SURVEY §4.3): relies on the native Partial+Final
+    * WindowGroupLimit — each map task ships only k rows per prefix, so a
+    * hot 2-char prefix shuffles k×tasks rows, not its fan-in (plan-audited
+    * on a skewed fixture in PlanAuditSpec). Deployments where k×tasks on
+    * one reducer is itself a straggler (100k-task clusters) can rank with
+    * [[TopK.salted]] instead, which additionally spreads the hot prefix's
+    * FINAL pass over several reducers, and pack with [[JsonPack.flat]] —
+    * identical output.
     */
-  def topCompletions(freq: DataFrame, k: Int, salts: Int = 1): DataFrame = {
-    val ranked =
-      if (salts > 1)
-        TopK.salted(freq, Seq("prefix"), freq("frequency"),
-          Seq(freq("query")), k, salts)
-      else TopK(freq, Seq("prefix"), freq("frequency"),
-        Seq(freq("query")), k)
-    JsonPack.flat(ranked, "prefix", "rnk", "query")
-  }
+  def topCompletions(freq: DataFrame, k: Int): DataFrame =
+    JsonPack.flat(
+      TopK(freq, Seq("prefix"), freq("frequency"), Seq(freq("query")), k),
+      "prefix", "rnk", "query")
 
   /** Empty cumulative state with the canonical schema. */
   def emptyState(spark: SparkSession): DataFrame =

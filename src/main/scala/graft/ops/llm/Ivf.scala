@@ -200,8 +200,8 @@ object Ivf {
         col("maxabs_micro").as("mxv"))
 
   /** The persisted-quantizer half of the streaming IVF maintenance:
-    * (cid, cc, cn2) built once from the accumulated corpus. Callers
-    * checkpoint it and hand it to [[int8CellIds]] per delta batch.
+    * (cid, cc, cn2) over the accumulated corpus. Callers materialize it
+    * once and hand it to [[int8CellIds]] per delta batch.
     */
   def int8Quantizer(vectors: DataFrame, nClusters: Int = 16): DataFrame =
     seededCentroids(int8Prep(vectors), nClusters)

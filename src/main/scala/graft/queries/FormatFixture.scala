@@ -15,11 +15,10 @@ import graft.Tables
   * `q_scan_text`) certifies the format reader end-to-end: a wrong
   * delimiter, schema drift, or partition-column loss changes the hash.
   *
-  * Same lifecycle contract as [[IncrFixture]]: one deterministic
-  * destination per (source dir, format, documents-fingerprint) in the
-  * cross-JVM [[StagingStore]] — re-runs and later sweeps reuse the
-  * landed generation; a regenerated corpus misses structurally and
-  * rebuilds. Bench builds these in the TIMED shared-base phase so the
+  * Same lifecycle contract as [[IncrFixture]]: one destination per
+  * (source dir, format, documents-fingerprint) under the per-JVM
+  * [[StagingStore]] root — re-runs reuse it; a regenerated corpus misses
+  * structurally and rebuilds. Bench builds these in the TIMED shared-base phase so the
   * per-query timer measures the scan, not fixture setup.
   */
 private[graft] object FormatFixture {
@@ -52,7 +51,7 @@ private[graft] object FormatFixture {
     synchronized {
       val fp = SharedBases.fingerprint(s, dir)
       cache.getOrElseUpdate(s"$dir@$format@$fp", {
-        StagingStore.getOrBuild(dir, s"fmt_$format", fp) { dest =>
+        StagingStore.stage(dir, s"fmt_$format", fp) { dest =>
         val d = docs(s, dir)
         format match {
           case "csv" =>

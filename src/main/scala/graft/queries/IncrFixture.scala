@@ -18,15 +18,12 @@ import graft.Tables
   * flag a rerun did not clear), and (b) leaked a full text copy of the
   * corpus to /tmp per sweep/determinism run. Now:
   *
-  *  - ONE deterministic destination per (source dir, documents
-  *    fingerprint) in the [[StagingStore]] — re-runs AND later JVMs
-  *    reuse the landed generation instead of leaking or re-splitting;
-  *    a rewritten documents table misses structurally (fingerprint in
-  *    the leaf name) and rebuilds, same staleness contract as
-  *    [[SharedBases]];
-  *  - concurrent writers race the store's atomic rename, never the
-  *    data (the r13 ADVICE discipline); older generations are evicted
-  *    when a new fingerprint lands, bounding what survives in tmpdir;
+  *  - ONE destination per (source dir, documents fingerprint) under the
+  *    per-JVM [[StagingStore]] root, deleted when the JVM exits —
+  *    re-runs reuse it instead of leaking or re-splitting; a rewritten
+  *    documents table misses structurally (fingerprint in the leaf
+  *    name), rebuilds and deletes the older generation, same staleness
+  *    contract as [[SharedBases]];
   *  - the returned path list keeps only the `h=` partitions that EXIST:
   *    `pmod(doc_id, 24)` residues can be sparse on tiny/sparse-id
   *    corpora, and a hard-coded 24-path list would make
@@ -44,15 +41,12 @@ private[graft] object IncrFixture {
   /** Existing `h=` partition paths of the fixture for `dir`, building it
     * on first use per (dir, documents-fingerprint). Newlines are
     * flattened before the file write so file lines == table rows and the
-    * parquet-side oracle sees the identical corpus. The layout persists
-    * across JVMs via [[StagingStore]] (r14) — a later sweep of the same
-    * testdata reuses the landed 24-file generation instead of
-    * re-splitting the corpus.
+    * parquet-side oracle sees the identical corpus.
     */
   def paths(s: SparkSession, dir: String): Seq[String] = synchronized {
     val fp = SharedBases.fingerprint(s, dir)
     cache.getOrElseUpdate(s"$dir@$fp", {
-      val dest = StagingStore.getOrBuild(dir, "incr24", fp) { tmp =>
+      val dest = StagingStore.stage(dir, "incr24", fp) { tmp =>
         Tables.table(s, dir, "documents")
           .select(pmod(col("doc_id"), lit(24)).cast("int").as("h"),
             regexp_replace(col("text"), "[\\r\\n]+", " ").as("value"))

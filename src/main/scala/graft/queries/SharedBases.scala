@@ -113,6 +113,22 @@ object SharedBases {
       }
     }
 
+  /** The memo lookup every single-table base goes through: the live
+    * entry for (`name`, `dir`, fingerprint of `tableFile`), else drop
+    * stale generations of `name` and [[put]] a fresh `build`.
+    */
+  private def memo(s: SparkSession, name: String, dir: String,
+                   tableFile: String = "documents.parquet")(
+      build: => DataFrame): DataFrame = synchronized {
+    val key = s"$name:$dir@${fingerprint(s, dir, tableFile)}"
+    cache.get(key) match {
+      case Some(e) if alive(s, e) => e.df
+      case _ =>
+        dropPrefix(s, s"$name:$dir@")
+        put(s, key, build).df
+    }
+  }
+
   /** Verified MinHash near-dup pairs (a, b, inter, uni) over
     * `documents` at the declared-family parameters.
     */
@@ -151,21 +167,13 @@ object SharedBases {
     * q_dbscan_prune, whose dominant cost is the SAME exact pair-mining
     * front-end. Keyed on the embeddings fingerprint (not documents).
     */
-  def dbscanRoles(s: SparkSession, dir: String): DataFrame = synchronized {
-    val fp = fingerprint(s, dir, "embeddings.parquet")
-    val k = s"dbscan:$dir@$fp"
-    cache.get(k) match {
-      case Some(e) if alive(s, e) => e.df
-      case _ =>
-        dropPrefix(s, s"dbscan:$dir@")
-        val e = Tables.table(s, dir, "embeddings")
-        val roles = graft.ops.llm.Similarity.dbscan(
-          e.select(e("vec_id"),
-            e("embedding").cast("array<double>")),
-          tau = 0.35, minPts = 4)
-        put(s, k, roles).df
+  def dbscanRoles(s: SparkSession, dir: String): DataFrame =
+    memo(s, "dbscan", dir, "embeddings.parquet") {
+      val e = Tables.table(s, dir, "embeddings")
+      graft.ops.llm.Similarity.dbscan(
+        e.select(e("vec_id"), e("embedding").cast("array<double>")),
+        tau = 0.35, minPts = 4)
     }
-  }
 
   /** The k=5 Jaccard kNN document graph at the declared-family
     * parameters — the edge set three graph consumers (q_pagerank's
@@ -177,18 +185,11 @@ object SharedBases {
     * audited graph-build operator and its plan evidence must stay a
     * real end-to-end pipeline).
     */
-  def knnEdges(s: SparkSession, dir: String): DataFrame = synchronized {
-    val fp = fingerprint(s, dir)
-    val k = s"knn_edges:$dir@$fp"
-    cache.get(k) match {
-      case Some(e) if alive(s, e) => e.df
-      case _ =>
-        dropPrefix(s, s"knn_edges:$dir@")
-        val g = Dedup.knnGraph(
-          Tables.table(s, dir, "documents"), "doc_id", "text", k = 5)
-        put(s, k, g).df
+  def knnEdges(s: SparkSession, dir: String): DataFrame =
+    memo(s, "knn_edges", dir) {
+      Dedup.knnGraph(Tables.table(s, dir, "documents"), "doc_id", "text",
+        k = 5)
     }
-  }
 
   /** Cross-session persistence: write the MinHash index behind the
     * shared bases as bucketed metastore tables (`<prefix>_bands` on
@@ -332,177 +333,26 @@ object SharedBases {
       s.table(s"${prefix}_books"), queries, m, k, shortlist)
   }
 
-  /** The digest-seeded int8 IVF quantizer over `embeddings`, hydrated
-    * from the cross-JVM [[StagingStore]] when a landed generation
-    * matches the table fingerprint — what `streamIvfAssign` routes new
-    * vectors by: the first session pays the corpus coding pass, every
-    * later drain of the same testdata loads `nClusters` rows. The
-    * seeding is deterministic, so the stored and rebuilt tables are
-    * identical and serving warm cannot move a hash; a regenerated
-    * embeddings table misses structurally (fingerprint in the leaf
-    * name) and rebuilds.
+  /** The digest-seeded int8 IVF quantizer (cid, cc, cn2) over
+    * `embeddings` — what `streamIvfAssign` routes new vectors by. Keyed
+    * on the embeddings fingerprint; `nClusters` rows, so every
+    * micro-batch of a drain reads it from the memo.
     */
   def ivfQuantizer(s: SparkSession, dir: String,
-                   nClusters: Int = 16): DataFrame = {
-    val fp = fingerprint(s, dir, "embeddings.parquet")
-    val path = StagingStore.getOrBuild(dir, s"ivf_quantizer_$nClusters",
-      fp) { dest =>
+                   nClusters: Int = 16): DataFrame =
+    memo(s, s"ivf_quantizer_$nClusters", dir, "embeddings.parquet") {
       graft.ops.llm.Ivf.int8Quantizer(
         Tables.table(s, dir, "embeddings")
           .select(col("vec_id"), col("embedding").cast("array<double>")),
-        nClusters).coalesce(1).write.parquet(dest)
+        nClusters)
     }
-    s.read.parquet(path)
-  }
 
   /** Verified exact-Jaccard pairs (a, b, inter, uni) over `documents`
     * at the declared-family parameters.
     */
   def jaccardPairs(s: SparkSession, dir: String): DataFrame =
-    synchronized {
-      val key = s"jac_pairs:$dir@${fingerprint(s, dir)}"
-      cache.get(key) match {
-        case Some(e) if alive(s, e) => e.df
-        case _ =>
-          dropPrefix(s, s"jac_pairs:$dir@")
-          put(s, key, Dedup.ngramJaccardPairs(
-            Tables.table(s, dir, "documents"), "doc_id", "text",
-            n = 3, num = 8, den = 10)).df
-      }
+    memo(s, "jac_pairs", dir) {
+      Dedup.ngramJaccardPairs(Tables.table(s, dir, "documents"),
+        "doc_id", "text", n = 3, num = 8, den = 10)
     }
-
-  // ---- cross-sweep snapshot store (r12 verdict #7) -------------------
-
-  /** The five expensive memo bases with the table whose fingerprint
-    * keys each (the builders' own key discipline). The snapshot is a
-    * MATERIALIZED VIEW of the memo: the rows written are exactly the
-    * rows the cold build produced and [[put]] registered, so a warm
-    * sweep's consumers are row-identical by construction — the
-    * bucketed-INDEX route for cross-session re-MINING (new corpus
-    * deltas against a stored index) is [[persistIndex]] /
-    * [[persistJaccardBase]]; this store answers the cheaper question
-    * "same corpus, next sweep" without re-mining at all.
-    */
-  private val snapshotBases: Seq[(String, String)] = Seq(
-    "mh_pairs" -> "documents.parquet",
-    "mh_sigs" -> "documents.parquet",
-    "jac_pairs" -> "documents.parquet",
-    "knn_edges" -> "documents.parquet",
-    "dbscan" -> "embeddings.parquet")
-
-  private def md5Hex(v: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(v.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-
-  /** Store layout: tmpdir/graft_sb_store/<dir-hash>/<name>@<table-fp>.
-    * The fingerprint in the leaf name makes staleness structural — a
-    * regenerated corpus simply misses the store and rebuilds cold; the
-    * snapshot writer evicts older generations of the same base so
-    * repeated regenerations don't accumulate pair-table copies.
-    * Deliberately NOT pid-scoped: the point is reuse across bench JVMs
-    * on the same testdata.
-    */
-  private def storePath(dir: String, name: String,
-                        fp: String): java.nio.file.Path =
-    java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_sb_store", md5Hex(dir).take(12), s"$name@$fp")
-
-  /** The bases that are built AND consumed as a pair: [[minhashBoth]]
-    * only serves from the memo when both mh_pairs and mh_sigs are alive,
-    * so hydration must treat them atomically — a torn store (interrupted
-    * snapshot) serving one of the two would publish a warm count the
-    * consumers never actually benefit from.
-    */
-  private val pairedBases = Set("mh_pairs", "mh_sigs")
-
-  /** Hydrate the memo from the snapshot store where fingerprints match
-    * (cheap parquet load instead of re-mining); returns name → warm so
-    * the caller can publish which path paid. A base already live in the
-    * memo counts as warm. Misses are left for the normal cold builders.
-    *
-    * Robustness (r13 ADVICE): a failed store read (concurrent eviction,
-    * torn files) falls back to the cold builder instead of propagating;
-    * the mh_pairs/mh_sigs pair is hydrated all-or-nothing so the
-    * published warm count matches what [[minhashBoth]] will serve.
-    */
-  def warmStart(s: SparkSession, dir: String): Map[String, Boolean] =
-    synchronized {
-      def hydrate(name: String, tableFile: String): Boolean = {
-        val fp = fingerprint(s, dir, tableFile)
-        val key = s"$name:$dir@$fp"
-        cache.get(key).exists(alive(s, _)) || {
-          val p = storePath(dir, name, fp)
-          java.nio.file.Files.exists(p.resolve("_SUCCESS")) &&
-            (try {
-              dropPrefix(s, s"$name:$dir@")
-              put(s, key, s.read.parquet(p.toString))
-              true
-            } catch { case _: Exception => false })
-        }
-      }
-      val raw = snapshotBases.map { case (name, tableFile) =>
-        name -> hydrate(name, tableFile)
-      }.toMap
-      val pairWarm = pairedBases.forall(raw)
-      if (!pairWarm)
-        // drop any half-hydrated member: minhashBoth cannot serve a
-        // single, and a lingering entry would hold a retained RDD that
-        // the cold rebuild then replaces anyway
-        pairedBases.foreach(n => dropPrefix(s, s"$n:$dir@"))
-      raw.map { case (n, w) =>
-        n -> (if (pairedBases(n)) pairWarm else w)
-      }
-    }
-
-  /** Write every live memo base missing from the store (the cold
-    * sweep's closing step — the build itself was already billed to the
-    * named base phases; this bills only the one-off snapshot write).
-    *
-    * Concurrency (r13 ADVICE): the store is deliberately shared across
-    * bench JVMs, so the write is staged to a dot-prefixed temp sibling
-    * and atomically renamed into the fingerprinted path — two concurrent
-    * cold sweeps both passing the existence check race the RENAME, not
-    * the data: the loser discards its staging dir and keeps the winner,
-    * and a warm reader can never observe a half-written generation.
-    * Older generations are evicted only AFTER the rename lands (and
-    * never the staging dirs of in-flight writers — they are dot-prefixed
-    * so the `name@` eviction filter skips them structurally).
-    */
-  def snapshot(s: SparkSession, dir: String): Unit = synchronized {
-    snapshotBases.foreach { case (name, tableFile) =>
-      val fp = fingerprint(s, dir, tableFile)
-      cache.get(s"$name:$dir@$fp").filter(alive(s, _)).foreach { e =>
-        val p = storePath(dir, name, fp)
-        if (!java.nio.file.Files.exists(p.resolve("_SUCCESS"))) {
-          val tmp = p.getParent.resolve(
-            s".staging-${p.getFileName}-${ProcessHandle.current.pid}")
-          try {
-            // pair/role tables are key-table-sized (never corpus-sized);
-            // a handful of files keeps the warm load scan cheap
-            e.df.coalesce(4).write.mode("overwrite").parquet(tmp.toString)
-            try {
-              java.nio.file.Files.move(tmp, p,
-                java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-              import scala.jdk.CollectionConverters._
-              java.nio.file.Files.list(p.getParent).iterator.asScala.toSeq
-                .filter(q => q != p &&
-                  q.getFileName.toString.startsWith(s"$name@"))
-                .foreach(graft.util.Fs.deleteRecursively)
-            } catch {
-              // lost the race (or the fs refused the atomic move):
-              // keep the winner's generation, discard ours
-              case _: java.io.IOException =>
-                graft.util.Fs.deleteRecursively(tmp)
-            }
-          } catch {
-            case ex: Exception =>
-              graft.util.Fs.deleteRecursively(tmp)
-              System.err.println(
-                s"[shared-bases] snapshot of $name skipped: ${ex.getMessage}")
-          }
-        }
-      }
-    }
-  }
 }

@@ -1,41 +1,31 @@
 package graft.queries
 
-/** Cross-JVM persistent store for fingerprint-keyed fixture layouts —
-  * the `SharedBases` snapshot-store discipline (r13 ADVICE-hardened:
-  * stage + atomic rename, evict-after-land) extracted for the staging
-  * fixtures (`StreamStaging`, `IncrFixture`, `FormatFixture`).
+/** Per-JVM scratch directory for the staged fixture layouts
+  * (`StreamStaging`, `IncrFixture`, `FormatFixture`): one directory in
+  * `java.io.tmpdir`, created on first use and deleted by a shutdown hook,
+  * like `GraftSession.local`'s scratch. Every JVM stages its own copies,
+  * so a layout is always written by the code that reads it; the owners
+  * memoize per (source dir, table fingerprint), so each layout is written
+  * once per JVM.
   *
-  * Why: the staged layouts are pure functions of (testdata dir, table
-  * fingerprint), yet each bench/verify JVM rebuilt them from scratch —
-  * ~5 s of every sweep's shared-base phase re-deriving byte-identical
-  * corpus copies. Production pipelines stage once and reuse; the store
-  * is that shape: the first JVM builds, every later sweep of the same
-  * testdata reuses, and a regenerated corpus misses structurally (the
-  * fingerprint is in the leaf name) and rebuilds.
-  *
-  * Layout: `$tmpdir/graft_stage_store/<md5(dir)·12>/<kind>@<fp>`.
-  * Concurrency: builders write to a dot-prefixed staging sibling and
-  * atomically RENAME into the generation path — two concurrent cold
-  * JVMs race the rename, the loser discards its staging dir and serves
-  * the winner's; a reader can never observe a half-written generation
-  * (`_SUCCESS` arrives with the rename). Older generations of the same
-  * kind are evicted only after the rename lands; the dot prefix keeps
-  * in-flight staging dirs structurally outside the eviction glob.
-  * Validation failures (torn dir, missing `_SUCCESS`) fall back to a
-  * rebuild instead of propagating.
+  * Layout: `<root>/<md5(dir)·12>/<kind>@<fp>`. A rewritten source table
+  * has a new fingerprint, so its layout lands at a new path, and the
+  * older generations of that kind are deleted first — repeated
+  * regenerations in one session do not pile up corpus copies.
   */
 private[graft] object StagingStore {
 
-  /** The store root all generations live under. */
-  private[graft] val root: java.nio.file.Path =
-    java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_stage_store")
+  /** The per-JVM root every staged layout lives under. */
+  private[graft] lazy val root: java.nio.file.Path = {
+    val r = java.nio.file.Files.createTempDirectory("graft-stage-")
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      graft.util.Fs.deleteRecursively(r)))
+    r
+  }
 
-  /** True iff `p` is a path INSIDE the store — the real marker consumers
-    * (e.g. StreamingPipeline's schema memo) should key immutability
-    * decisions on, instead of a substring match that any ad-hoc temp dir
-    * could accidentally satisfy. Normalized prefix compare, not string
-    * `contains`.
+  /** True iff `p` is a path INSIDE [[root]] — the marker consumers
+    * (e.g. StreamingPipeline's schema memo) key immutability decisions
+    * on. Normalized prefix compare, not string `contains`.
     */
   private[graft] def isStorePath(p: String): Boolean =
     try java.nio.file.Paths.get(p).toAbsolutePath.normalize
@@ -47,47 +37,23 @@ private[graft] object StagingStore {
       .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       .map("%02x".format(_)).mkString
 
-  private def genPath(dir: String, kind: String,
-                      fp: String): java.nio.file.Path =
-    root.resolve(md5(dir).take(12)).resolve(s"$kind@$fp")
-
-  /** The staged directory for (dir, kind, fp), building via `write`
-    * (given the path to produce, including `_SUCCESS` — every Spark
-    * writer emits one) when the generation is absent. The returned path
-    * is always a landed generation with `_SUCCESS` present.
+  /** Write the (dir, kind, fp) layout via `write` (given the path to
+    * produce) and return that path. Any earlier generation of `kind` for
+    * `dir` — a since-rewritten source, or a write that failed part-way —
+    * is deleted first. Callers memoize the returned path.
     */
-  def getOrBuild(dir: String, kind: String, fp: String)(
+  def stage(dir: String, kind: String, fp: String)(
       write: String => Unit): String = {
-    val p = genPath(dir, kind, fp)
-    if (java.nio.file.Files.exists(p.resolve("_SUCCESS"))) return p.toString
-    val tmp = p.getParent.resolve(
-      s".staging-${p.getFileName}-${ProcessHandle.current.pid}")
-    java.nio.file.Files.createDirectories(p.getParent)
-    try {
-      graft.util.Fs.deleteRecursively(tmp)
-      write(tmp.toString)
-      try {
-        java.nio.file.Files.move(tmp, p,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        // evict older generations only after the new one is live
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.list(p.getParent).iterator.asScala.toSeq
-          .filter(q => q != p && q.getFileName.toString.startsWith(s"$kind@"))
-          .foreach(graft.util.Fs.deleteRecursively)
-      } catch {
-        // lost the race to a concurrent builder (or the fs refused the
-        // atomic move onto the landed winner): keep theirs, drop ours
-        case _: java.io.IOException =>
-          graft.util.Fs.deleteRecursively(tmp)
-      }
-      if (!java.nio.file.Files.exists(p.resolve("_SUCCESS")))
-        throw new IllegalStateException(
-          s"staging for $kind@$fp landed without _SUCCESS")
-      p.toString
-    } catch {
-      case e: Exception =>
-        graft.util.Fs.deleteRecursively(tmp)
-        throw e
-    }
+    val parent = root.resolve(md5(dir).take(12))
+    java.nio.file.Files.createDirectories(parent)
+    import scala.jdk.CollectionConverters._
+    val listing = java.nio.file.Files.list(parent)
+    try listing.iterator.asScala.toSeq
+      .filter(_.getFileName.toString.startsWith(s"$kind@"))
+      .foreach(graft.util.Fs.deleteRecursively)
+    finally listing.close()
+    val p = parent.resolve(s"$kind@$fp").toString
+    write(p)
+    p
   }
 }

@@ -4,9 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.{Pipeline, Tables}
-import graft.io.Sinks
-import graft.ops.Merge
+import graft.{Main, Tables}
 
 /** Structured Streaming variants (SURVEY §2.10/§7.5).
   *
@@ -19,7 +17,9 @@ import graft.ops.Merge
   *    not yet processed (the checkpoint tracks seen files, replacing the
   *    reference's "one hardcoded hourly file per run" and making the
   *    documented-but-unimplemented 24h catch-up automatic), merges them
-  *    into the parquet state via foreachBatch + staging swap, then stops.
+  *    into the parquet state via foreachBatch, then stops. Each
+  *    micro-batch runs the hourly job's own step (`Main.mergeAndPublish`),
+  *    so both paths write the same tables.
   *    Re-running on a schedule reproduces the CronJob semantics with
   *    exactly-once file accounting.
   *
@@ -40,23 +40,8 @@ object StreamingPipeline {
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val session = batch.sparkSession
-        val state =
-          if (new org.apache.hadoop.fs.Path(stateDir).getFileSystem(
-              session.sessionState.newHadoopConf())
-              .exists(new org.apache.hadoop.fs.Path(stateDir)))
-            session.read.parquet(stateDir)
-              .select("prefix", "query", "frequency")
-          else Pipeline.emptyState(session)
-        val merged = Merge(Pipeline.batchCounts(batch), state,
-          Seq("prefix", "query"), "frequency")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          merged.count() // materialize before touching the state dir
-          Sinks.overwriteSafely(merged, stateDir)
-          Sinks.overwriteSafely(Pipeline.topCompletions(merged, k), topKDir)
-          batches += 1
-        } finally merged.unpersist()
+        Main.mergeAndPublish(batch, stateDir, topKDir, k)
+        batches += 1
         ()
       }
       .start()
@@ -482,29 +467,27 @@ object StreamingPipeline {
     }
   }
   /** L94 — streaming IVF index maintenance (r12 verdict #9): new
-    * embeddings delta-assign to the PERSISTED coarse quantizer per
+    * embeddings delta-assign to a materialized coarse quantizer per
     * micro-batch — the ANN companion to the persisted-MinHash-index
     * ingest ([[incrementalDedupIndexed]]): there the stored state is a
     * band table mined against, here it is the (cid, cc, cn2) centroid
-    * table new vectors are routed by. The quantizer is built ONCE from
-    * the accumulated corpus (`Ivf.int8Quantizer`, the digest-seeded
-    * integer-exact scheme of q_similarity_ivf_exact), checkpointed, and
-    * broadcast into every batch; each trigger's cost is O(delta ×
-    * nClusters) with nothing corpus-sized touched — the index a 100 TB
-    * vector store maintains without refitting. Assignment is per-row
+    * table new vectors are routed by. The quantizer is built once per
+    * session from the accumulated corpus (`Ivf.int8Quantizer`, the
+    * digest-seeded integer-exact scheme of q_similarity_ivf_exact), held
+    * materialized in the `SharedBases` memo, and broadcast into every
+    * batch; each trigger's cost is O(delta × nClusters) with nothing
+    * corpus-sized touched — the index a 100 TB vector store maintains
+    * without refitting. Assignment is per-row
     * deterministic (no cross-row state), so the drained facts equal the
     * batch replay of assignment over the whole corpus bit-for-bit —
     * that equality is exactly what the gate hash certifies.
     */
   def streamIvfAssign(spark: SparkSession, sfDir: String): DataFrame = {
-    // hydrated from the fingerprint-keyed store (SharedBases.
-    // ivfQuantizer): the first session builds + stages the quantizer,
-    // later drains of the same corpus load 16 rows — the "load the
-    // index, don't rebuild it" production shape; determinism of the
-    // digest seeding keeps the stored and rebuilt tables identical
+    // the session memo (SharedBases.ivfQuantizer) holds the quantizer
+    // materialized: the first drain of a session builds it, every
+    // micro-batch and later drain reads its 16 persisted rows
     val cents = graft.queries.SharedBases
       .ivfQuantizer(spark, sfDir, nClusters = 16)
-      .localCheckpoint(true) // one quantizer serves every micro-batch
     drainAppend(spark,
       graft.queries.StreamStaging.dir(spark, sfDir, "emb8"), "ivfassign",
       perBatch = b => graft.ops.llm.Ivf.int8CellIds(
@@ -928,19 +911,16 @@ object StreamingPipeline {
 
   /** Source schema for a staged fixture dir, memoized per dir: every
     * drain start was paying a listing + parquet-footer read for a schema
-    * that is immutable once staged (the StagingStore generations are
-    * content-addressed — a re-staged corpus lands at a NEW path, so a
-    * path-keyed memo can never serve a stale schema). Only store paths
-    * are memoized — decided by `StagingStore.isStorePath` (a normalized
-    * prefix compare against the real store root, r15 ADVICE), not a
-    * substring match: the ad-hoc drain overload stages into plain temp
-    * dirs, which are deleted after the call and whose names could in
-    * principle recycle under a different dataset — those pay the one
-    * footer read instead of risking a stale hit. The memo is bounded:
-    * before inserting past 64 entries, paths whose generations were
-    * evicted from disk are dropped (generations are re-landed at new
-    * fingerprint paths, so long sessions would otherwise grow the map
-    * monotonically).
+    * that is immutable once staged (a restaged layout lands at a NEW
+    * fingerprinted path under the per-JVM `StagingStore.root`, so a
+    * path-keyed memo can never serve a stale schema). Only paths under
+    * that root are memoized — decided by `StagingStore.isStorePath` (a
+    * normalized prefix compare, not a substring match): the ad-hoc drain
+    * overload stages into plain temp dirs, which are deleted after the
+    * call and whose names could in principle recycle under a different
+    * dataset — those pay the one footer read instead of risking a stale
+    * hit. The memo is bounded: before inserting past 64 entries, paths
+    * whose generations were deleted by a restage are dropped.
     */
   private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
     String, org.apache.spark.sql.types.StructType]()

@@ -106,7 +106,8 @@ class PlanAuditSpec extends SparkSpec {
     // SURVEY §4.3 skew shape: one hot 2-char prefix holding 5000 distinct
     // queries, a uniform tail, spread over several map tasks. Audits the
     // PRODUCTION path (Pipeline.topCompletions) at the fixture the skew
-    // guard exists for, in both the native and salted variants.
+    // guard exists for, against the salted variant (TopK.salted packed by
+    // the same JsonPack.flat).
     import spark.implicits._
     import org.apache.spark.sql.functions.{get_json_object, lit}
     val hot = (1 to 5000).map(i => ("ho", s"how to $i", (i % 7 + 1).toLong))
@@ -120,7 +121,10 @@ class PlanAuditSpec extends SparkSpec {
       p.linesIterator.count(_.contains("WindowGroupLimit")) >= 2,
       s"skewed production plan lost the two-phase group limit:\n$p")
 
-    val salted = Pipeline.topCompletions(freq, k = 10, salts = 16)
+    val salted = graft.ops.JsonPack.flat(
+      graft.ops.TopK.salted(freq, Seq("prefix"), freq("frequency"),
+        Seq(freq("query")), 10, 16),
+      "prefix", "rnk", "query")
     val ps = salted.queryExecution.executedPlan.toString
     assert(ps.linesIterator.count(_.contains("WindowGroupLimit")) >= 3,
       s"salted plan must carry the extra spreading phase:\n$ps")

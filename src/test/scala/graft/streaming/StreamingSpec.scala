@@ -24,8 +24,12 @@ class StreamingSpec extends SparkSpec {
     val n1 = StreamingPipeline.runAvailableNow(spark, logs,
       s"$dir/state", s"$dir/topk", 5, s"$dir/ckpt")
     val state1 = spark.read.parquet(s"$dir/state")
+      .select("prefix", "query", "frequency")
       .as[(String, String, Long)].collect().toMap2
     assert(n1 >= 1)
+    // the backfill writes the hourly job's tables: last_updated on both
+    assert(spark.read.parquet(s"$dir/state").columns.contains("last_updated"))
+    assert(spark.read.parquet(s"$dir/topk").columns.contains("last_updated"))
     assert(state1(("ab", "abc")) == 2L && state1(("xy", "xyz")) == 1L)
 
     // second invocation with one NEW file: old file must not re-count
@@ -33,6 +37,7 @@ class StreamingSpec extends SparkSpec {
     StreamingPipeline.runAvailableNow(spark, logs,
       s"$dir/state", s"$dir/topk", 5, s"$dir/ckpt")
     val state2 = spark.read.parquet(s"$dir/state")
+      .select("prefix", "query", "frequency")
       .as[(String, String, Long)].collect().toMap2
     assert(state2(("ab", "abc")) == 3L, s"got $state2")
     assert(state2(("xy", "xyz")) == 1L)
@@ -41,6 +46,7 @@ class StreamingSpec extends SparkSpec {
     StreamingPipeline.runAvailableNow(spark, logs,
       s"$dir/state", s"$dir/topk", 5, s"$dir/ckpt")
     val state3 = spark.read.parquet(s"$dir/state")
+      .select("prefix", "query", "frequency")
       .as[(String, String, Long)].collect().toMap2
     assert(state3 == state2)
   }
